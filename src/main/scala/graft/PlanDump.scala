@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 /** Regenerates PLANS.md: `explain("formatted")` output for the headline
   * queries, so the plan shapes (pushdown, pruning, join modes, partial
   * aggregation, no nested loops) are reviewable without running Spark.
-  * Usage: sbt "runMain graft.PlanDump [sfDir]"
+  * Given a query list, prints those queries' formatted plans to stdout
+  * instead (before/after plan diffs of an optimization).
+  * Usage: sbt "runMain graft.PlanDump [sfDir] [q1,q2,...]"
   */
 object PlanDump {
   private val headliners = Seq(
@@ -450,19 +452,29 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Sessions.build()
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Auto-generated by `graft.PlanDump` at $sfDir. Regenerate: " +
-      "`sbt \"runMain graft.PlanDump\"`.\n")
-    headliners.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
+    val only = args.lift(1).map(_.split(',').map(_.trim).filter(_.nonEmpty))
+    only.foreach { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"PLANS.md written (${headliners.size} plans)")
+    val spark = Sessions.build()
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+    only match {
+      case Some(names) =>
+        names.foreach(name => print(s"== $name ==\n${plan(name)}\n"))
+      case None =>
+        val sb = new StringBuilder
+        sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+        sb.append(s"Auto-generated by `graft.PlanDump` at $sfDir. Regenerate: " +
+          "`sbt \"runMain graft.PlanDump\"`.\n")
+        headliners.foreach { case (name, note) =>
+          sb.append(s"\n## $name\n\n$note\n\n```\n${plan(name)}```\n")
+        }
+        Files.writeString(Paths.get("PLANS.md"), sb.toString)
+        println(s"PLANS.md written (${headliners.size} plans)")
+    }
     spark.stop()
   }
 }

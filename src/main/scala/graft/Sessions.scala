@@ -40,13 +40,12 @@ object Sessions {
       // x_knn_graph / x_lsh_recall all pushed superlinear), and the r15
       // latency win it bought at sf0.1 disappeared once the 24g heap
       // removed the per-task GC tax (interleaved A/B: flat-to-better at
-      // sf0.1, 1.3-3.5x faster at sf1 with parallelism-first). The
-      // advisory size stays env-parameterised for clusters that want
-      // size-based targets (guide §2.2's 128-512 MB production range).
+      // sf0.1, 1.3-3.5x faster at sf1 with parallelism-first). Clusters
+      // that want size-based targets (128-512 MB in production) override
+      // both through `extraConfigs`.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "16m"))
+        "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
       // Let AQE coalesce CACHED plan output too (off by default): without
       // it every persisted aggregate/join is stored at the static
       // shuffle-partition count (32 here), and every warm consumer stage

@@ -115,13 +115,24 @@ object GraftOps {
     * has thousands of splits, the branch is not taken, and no shuffle
     * is added — the conditional IS the scale adaptivity (a blanket
     * repartition would tax every real-cluster scan with a full
-    * shuffle). getNumPartitions is plan metadata (file listing), not a
-    * job. Row-level results are unchanged: callers aggregate globally
-    * or per key downstream.
+    * shuffle). The split count is read off the planned scan RDD, not a
+    * job; building that RDD still costs ~20 ms per call (sf0.1
+    * documents parquet, 4-core box), so the probe uses the internal row
+    * RDD (`df.rdd` also plans a row deserializer, ~10 ms more).
+    * Row-level results are unchanged: callers aggregate globally or per
+    * key downstream.
+    *
+    * The media tier's payload tables (LlmQueries.mediaPayloads) are
+    * the sharpest case: the round-10 sf1 rehearsal measured
+    * x_audio_decode 14x slower at 10x data while its codec map ran on
+    * the single split. The count is EXPLICIT because user-pinned counts
+    * are exempt from AQE coalescing: the shuffled bytes are 8-byte ids,
+    * so size-based coalescing folded every decode back onto ONE task.
     */
   def spreadScan(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
+    else df
   }
 
   /** Stage-fused execution scope for the ITERATIVE loops (connected

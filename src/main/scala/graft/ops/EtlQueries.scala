@@ -170,12 +170,8 @@ object EtlQueries extends QueryPack {
                 maxRecordsPerFile: Long = 0L): String = {
     val frag = tmp("graft_frag")
     // fixture prep, not the operator: the 64-fragment scatter only
-    // exists to simulate a small-file-ridden table for the compaction to
-    // fix. Writing the scratch copy uncompressed skips a full encode+
-    // decode of the table that the COMPACTION (the measured operator,
-    // whose output keeps the session codec) never pays in production.
-    Tables.lineitem(s, d).repartition(64).write.mode("overwrite")
-      .option("compression", "none").parquet(frag)
+    // simulates a small-file-ridden table for the compaction to fix
+    Tables.lineitem(s, d).repartition(64).write.mode("overwrite").parquet(frag)
     // maxRecordsPerFile (0 = unbounded): compaction must not trade many
     // small files for one oversized one — the governor re-splits a fat
     // range partition into sequential, still-sorted chunks (EtlSpec pins

@@ -3,7 +3,7 @@ package graft.ops
 import graft.{QueryPack, Tables}
 import graft.api.GraftOps
 import graft.functions.TextFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-data-pipeline tier (SURVEY.md §2.9) — the north-star extension
@@ -773,6 +773,17 @@ object LlmQueries extends QueryPack {
       mediaTable(s, d).select(col("doc_id"),
         col("media.content").as("content"), col("media.mime").as("mime")))
 
+  /** Synthesized media payloads, one per document id. The id scan goes
+    * through [[GraftOps.spreadScan]] before `encode` runs: the per-row
+    * codec work, not the 8-byte ids, is what these stages cost.
+    */
+  private def mediaPayloads(s: SparkSession, d: String)(
+      encode: Long => graft.api.MediaIn): Dataset[graft.api.MediaIn] = {
+    import s.implicits._
+    GraftOps.spreadScan(Tables.documents(s, d).select(col("doc_id")))
+      .as[Long].map(encode)
+  }
+
   /** The PNG media table: one GENUINE PNG payload per document
     * (ImageIO.write of a small deterministic raster), dims a pure
     * function of doc_id so the oracle can recompute them without
@@ -780,32 +791,13 @@ object LlmQueries extends QueryPack {
     * PNG signature — a corrupt feed row whose decode must fail loudly.
     */
   def mediaPngTable(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[graft.api.MediaIn] = {
-    import s.implicits._
-    // repartition the id scan BEFORE the per-row-expensive codec map:
-    // the documents table often reads as a single split (one small
-    // parquet file), which would serialize every encode onto one task —
-    // the round-9 single-split lesson, re-caught by the round-10 sf1
-    // rehearsal on x_audio_decode (14x at 10x data before this shuffle).
-    // The partition count is EXPLICIT (user-pinned counts are exempt
-    // from AQE coalescing): these stages are CPU-bound per ROW while
-    // their shuffled bytes are just 8-byte ids, so the r15 size-based
-    // coalescing (parallelismFirst=false, 16 MB advisory) silently
-    // folded every media decode back onto ONE task — the exact
-    // regression the shuffle exists to prevent. defaultParallelism
-    // scales with the cluster; rows-per-task grows with data, which is
-    // the right shape for a map-only stage.
-    Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val png = graft.api.MultimodalDecode.encodePng(
-            4 + (id % 29).toInt, 4 + (id % 23).toInt, id)
-          val content = if (id % 97 == 0) png.take(8) else png
-          graft.api.MediaIn(id, content, "image/png")
-        }
-      }
-  }
+      : Dataset[graft.api.MediaIn] =
+    mediaPayloads(s, d) { id =>
+      val png = graft.api.MultimodalDecode.encodePng(
+        4 + (id % 29).toInt, 4 + (id % 23).toInt, id)
+      val content = if (id % 97 == 0) png.take(8) else png
+      graft.api.MediaIn(id, content, "image/png")
+    }
 
   /** x_mm_decode: REAL image decode through the batch harness — the
     * payloads are genuine PNGs ([[mediaPngTable]]) and width/height come
@@ -830,17 +822,12 @@ object LlmQueries extends QueryPack {
     * dimension formula like [[mmDecode]].
     */
   def mmDecodeJpeg(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val jpg = graft.api.MultimodalDecode.encodeJpeg(
-            8 + (id % 25).toInt, 8 + (id % 19).toInt, id)
-          val content = if (id % 101 == 0) jpg.take(3) else jpg
-          graft.api.MediaIn(id, content, "image/jpeg")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val jpg = graft.api.MultimodalDecode.encodeJpeg(
+        8 + (id % 25).toInt, 8 + (id % 19).toInt, id)
+      val content = if (id % 101 == 0) jpg.take(3) else jpg
+      graft.api.MediaIn(id, content, "image/jpeg")
+    }
     graft.api.MultimodalDecode.decode(payloads).toDF()
       .select(col("doc_id"), col("mime"), col("width"), col("height"),
         col("ok").cast("int").as("ok"))
@@ -857,19 +844,14 @@ object LlmQueries extends QueryPack {
     * to 5 bytes (inside every format's header) and must fail loudly.
     */
   def mmDecodeMulti(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val fmts = Array("png", "jpeg", "gif", "bmp", "tiff")
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val fmt = fmts((id % 5).toInt)
-          val img = graft.api.MultimodalDecode.encodeImage(
-            fmt, 8 + (id % 23).toInt, 8 + (id % 17).toInt, id)
-          val content = if (id % 97 == 0) img.take(5) else img
-          graft.api.MediaIn(id, content, s"image/$fmt")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val fmt = fmts((id % 5).toInt)
+      val img = graft.api.MultimodalDecode.encodeImage(
+        fmt, 8 + (id % 23).toInt, 8 + (id % 17).toInt, id)
+      val content = if (id % 97 == 0) img.take(5) else img
+      graft.api.MediaIn(id, content, s"image/$fmt")
+    }
     graft.api.MultimodalDecode.decode(payloads).toDF()
       .select(col("doc_id"), col("mime"), col("width"), col("height"),
         col("ok").cast("int").as("ok"))
@@ -904,19 +886,14 @@ object LlmQueries extends QueryPack {
     * oracle is possible.
     */
   def mmPhashDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          // 16+ px sources so the 9x8 fingerprint DOWNSCALES (averaging
-          // mixes pixels, full comparison entropy); upscaled tiny images
-          // duplicate rows/columns and share forced-zero hash bits
-          val png = graft.api.MultimodalDecode.encodePng(
-            16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
-          graft.api.MediaIn(id, png, "image/png")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      // 16+ px sources so the 9x8 fingerprint DOWNSCALES (averaging
+      // mixes pixels, full comparison entropy); upscaled tiny images
+      // duplicate rows/columns and share forced-zero hash bits
+      val png = graft.api.MultimodalDecode.encodePng(
+        16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
+      graft.api.MediaIn(id, png, "image/png")
+    }
     graft.api.MultimodalDecode.phash(payloads).toDF()
       .groupBy(col("phash"))
       .agg(min(col("doc_id")).as("cluster_rep"),
@@ -937,18 +914,13 @@ object LlmQueries extends QueryPack {
     * one canonical value and no two distinct fields collided.
     */
   def mmPhashRot(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val b = (id % 105).toInt
-          val png = graft.api.MultimodalDecode.encodePngRotated(
-            16 + b % 5, 16 + b % 3, b.toLong,
-            turns = ((id / 105) % 4).toInt)
-          graft.api.MediaIn(id, png, "image/png")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val b = (id % 105).toInt
+      val png = graft.api.MultimodalDecode.encodePngRotated(
+        16 + b % 5, 16 + b % 3, b.toLong,
+        turns = ((id / 105) % 4).toInt)
+      graft.api.MediaIn(id, png, "image/png")
+    }
     graft.api.MultimodalDecode.phashRot(payloads).toDF()
       .groupBy(col("phash"))
       .agg(min(col("doc_id")).as("cluster_rep"),
@@ -977,18 +949,13 @@ object LlmQueries extends QueryPack {
     * class.
     */
   def mmPhashOrient(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val b = (id % 105).toInt
-          val png = graft.api.MultimodalDecode.encodePngOriented(
-            16 + b % 5, 16 + b % 3, b.toLong,
-            orientation = 1 + (id % 8).toInt)
-          graft.api.MediaIn(id, png, "image/png")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val b = (id % 105).toInt
+      val png = graft.api.MultimodalDecode.encodePngOriented(
+        16 + b % 5, 16 + b % 3, b.toLong,
+        orientation = 1 + (id % 8).toInt)
+      graft.api.MediaIn(id, png, "image/png")
+    }
     graft.api.MultimodalDecode.phashOriented(payloads).toDF()
       .groupBy(col("ohash"))
       .agg(min(col("doc_id")).as("cluster_rep"),
@@ -1011,21 +978,16 @@ object LlmQueries extends QueryPack {
     * hamming is exactly 0 because the pixels are identical.
     */
   def mmPhashNear(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          // 16+ px sources so the 9x8 fingerprint DOWNSCALES (averaging
-          // mixes pixels, full comparison entropy); upscaled tiny images
-          // duplicate rows/columns and share forced-zero hash bits
-          val png = graft.api.MultimodalDecode.encodePng(
-            16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
-          // unique post-IEND trailer: same pixels, different bytes
-          val trailer = java.nio.ByteBuffer.allocate(8).putLong(id).array()
-          graft.api.MediaIn(id, png ++ trailer, "image/png")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      // 16+ px sources so the 9x8 fingerprint DOWNSCALES (averaging
+      // mixes pixels, full comparison entropy); upscaled tiny images
+      // duplicate rows/columns and share forced-zero hash bits
+      val png = graft.api.MultimodalDecode.encodePng(
+        16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
+      // unique post-IEND trailer: same pixels, different bytes
+      val trailer = java.nio.ByteBuffer.allocate(8).putLong(id).array()
+      graft.api.MediaIn(id, png ++ trailer, "image/png")
+    }
     val hashed = GraftOps.cacheOnce(
       graft.api.MultimodalDecode.phash(payloads).toDF()
         .filter(col("ok")).select(col("doc_id"), col("phash")))
@@ -1062,19 +1024,14 @@ object LlmQueries extends QueryPack {
     * decode→fingerprint→two-sided-rollup chain.
     */
   def mmCaptionConflict(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          // same (w, h, seed) triple as x_mm_phash_dedup: ids congruent
-          // mod 140 carry byte-identical pixels (16+ px so the 9x8
-          // fingerprint downscales with full comparison entropy)
-          val png = graft.api.MultimodalDecode.encodePng(
-            16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
-          graft.api.MediaIn(id, png, "image/png")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      // same (w, h, seed) triple as x_mm_phash_dedup: ids congruent
+      // mod 140 carry byte-identical pixels (16+ px so the 9x8
+      // fingerprint downscales with full comparison entropy)
+      val png = graft.api.MultimodalDecode.encodePng(
+        16 + (id % 5).toInt, 16 + (id % 4).toInt, id % 140)
+      graft.api.MediaIn(id, png, "image/png")
+    }
     val imgKeys = graft.api.MultimodalDecode.phash(payloads).toDF()
       .filter(col("ok")).select(col("doc_id"), col("phash"))
     // caption synthesis plants the two degenerate forms a crawl
@@ -1102,29 +1059,21 @@ object LlmQueries extends QueryPack {
     * corrupt feed row whose decode must fail loudly.
     */
   def mediaWavTable(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[graft.api.MediaIn] = {
-    import s.implicits._
-    // same single-split guard as mediaPngTable — WAV synthesis is the
-    // most expensive per-row codec here (~3 KB PCM per doc)
-    Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val frames = 800 + (id % 1600).toInt
-          val (bytes, mime) =
-            if (id % 5 == 0)
-              (graft.api.MultimodalDecode.encodeWav(frames, id, channels = 2),
-                "audio/wav")
-            else if (id % 7 == 0)
-              (graft.api.MultimodalDecode.encodeAiff(frames, id),
-                "audio/aiff")
-            else
-              (graft.api.MultimodalDecode.encodeWav(frames, id), "audio/wav")
-          val content = if (id % 89 == 0) bytes.take(8) else bytes
-          graft.api.MediaIn(id, content, mime)
-        }
-      }
-  }
+      : Dataset[graft.api.MediaIn] =
+    mediaPayloads(s, d) { id =>
+      val frames = 800 + (id % 1600).toInt
+      val (bytes, mime) =
+        if (id % 5 == 0)
+          (graft.api.MultimodalDecode.encodeWav(frames, id, channels = 2),
+            "audio/wav")
+        else if (id % 7 == 0)
+          (graft.api.MultimodalDecode.encodeAiff(frames, id),
+            "audio/aiff")
+        else
+          (graft.api.MultimodalDecode.encodeWav(frames, id), "audio/wav")
+      val content = if (id % 89 == 0) bytes.take(8) else bytes
+      graft.api.MediaIn(id, content, mime)
+    }
 
   /** x_audio_decode: REAL audio decode — sample rate / channels / frame
     * length parsed from the actual RIFF stream by the JDK's
@@ -1163,20 +1112,15 @@ object LlmQueries extends QueryPack {
     * clamped final partial window, counts — without regenerating a
     * sample; corrupt rows (8-byte truncation, every 89th doc) yield one
     * loud ok=0 row. Pure map 1→N work, no shuffle after the id
-    * repartition.
+    * spread.
     */
   def audioVad(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val wav = graft.api.MultimodalDecode.encodeWavVad(
-            frames = 800 + (id % 1600).toInt, seed = id)
-          val content = if (id % 89 == 0) wav.take(8) else wav
-          graft.api.MediaIn(id, content, "audio/wav")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val wav = graft.api.MultimodalDecode.encodeWavVad(
+        frames = 800 + (id % 1600).toInt, seed = id)
+      val content = if (id % 89 == 0) wav.take(8) else wav
+      graft.api.MediaIn(id, content, "audio/wav")
+    }
     graft.api.MultimodalDecode.vadSegments(payloads).toDF()
       .select(col("doc_id"), col("seg_idx"), col("start_ms"),
         col("end_ms"), col("n_windows"), col("ok").cast("int").as("ok"))
@@ -1193,21 +1137,16 @@ object LlmQueries extends QueryPack {
     * rows (7-byte truncation) fail loudly. Pure map work, no shuffle.
     */
   def audioProbeMp3(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val mp3 = graft.api.MultimodalDecode.encodeMp3(
-            frames = 20 + (id % 30).toInt,
-            bitrateIdx = 1 + (id % 14).toInt,
-            rateIdx = (id % 3).toInt,
-            seed = id,
-            withId3 = id % 4 == 0)
-          val content = if (id % 73 == 0) mp3.take(7) else mp3
-          graft.api.MediaIn(id, content, "audio/mpeg")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val mp3 = graft.api.MultimodalDecode.encodeMp3(
+        frames = 20 + (id % 30).toInt,
+        bitrateIdx = 1 + (id % 14).toInt,
+        rateIdx = (id % 3).toInt,
+        seed = id,
+        withId3 = id % 4 == 0)
+      val content = if (id % 73 == 0) mp3.take(7) else mp3
+      graft.api.MediaIn(id, content, "audio/mpeg")
+    }
     graft.api.MultimodalDecode.probeMp3(payloads).toDF()
       .select(col("doc_id"), col("mime"), col("n_bytes"), col("n_frames"),
         col("bitrate_kbps"), col("sample_rate"), col("duration_ms"),
@@ -1227,23 +1166,18 @@ object LlmQueries extends QueryPack {
     * next to WAV/AIFF decode and the MP3 frame walk. Pure map work.
     */
   def audioProbeFlac(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val flac = graft.api.MultimodalDecode.encodeFlac(
-            sampleRate = Array(44100, 48000, 22050)((id % 3).toInt),
-            channels = 1 + (id % 2).toInt,
-            bitsPerSample = if (id % 5 == 0) 24 else 16,
-            totalSamples = 10000L + id % 90000,
-            seed = id,
-            bodyLen = 64 + (id % 100).toInt,
-            withPadding = id % 4 == 0)
-          val content = if (id % 79 == 0) flac.take(9) else flac
-          graft.api.MediaIn(id, content, "audio/flac")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val flac = graft.api.MultimodalDecode.encodeFlac(
+        sampleRate = Array(44100, 48000, 22050)((id % 3).toInt),
+        channels = 1 + (id % 2).toInt,
+        bitsPerSample = if (id % 5 == 0) 24 else 16,
+        totalSamples = 10000L + id % 90000,
+        seed = id,
+        bodyLen = 64 + (id % 100).toInt,
+        withPadding = id % 4 == 0)
+      val content = if (id % 79 == 0) flac.take(9) else flac
+      graft.api.MediaIn(id, content, "audio/flac")
+    }
     graft.api.MultimodalDecode.probeFlac(payloads).toDF()
       .select(col("doc_id"), col("mime"), col("n_bytes"),
         col("sample_rate"), col("channels"), col("bits_per_sample"),
@@ -1264,22 +1198,17 @@ object LlmQueries extends QueryPack {
     * loudly. Pure map work, no shuffle.
     */
   def mmExif(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val jpg = graft.api.MultimodalDecode.encodeExif(
-            width = 640 + (id % 7).toInt * 16,
-            height = 480 + (id % 5).toInt * 16,
-            orientation = 1 + (id % 8).toInt,
-            littleEndian = id % 2 == 1,
-            withJfif = id % 3 == 0,
-            extraEntry = id % 2 == 0)
-          val content = if (id % 103 == 0) jpg.take(6) else jpg
-          graft.api.MediaIn(id, content, "image/jpeg")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val jpg = graft.api.MultimodalDecode.encodeExif(
+        width = 640 + (id % 7).toInt * 16,
+        height = 480 + (id % 5).toInt * 16,
+        orientation = 1 + (id % 8).toInt,
+        littleEndian = id % 2 == 1,
+        withJfif = id % 3 == 0,
+        extraEntry = id % 2 == 0)
+      val content = if (id % 103 == 0) jpg.take(6) else jpg
+      graft.api.MediaIn(id, content, "image/jpeg")
+    }
     graft.api.MultimodalDecode.probeExif(payloads).toDF()
       .select(col("doc_id"), col("byte_order"), col("orientation"),
         col("width"), col("height"), col("n_entries"),
@@ -1298,17 +1227,12 @@ object LlmQueries extends QueryPack {
     * work, no shuffle.
     */
   def subtitleCues(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val srt = graft.api.MultimodalDecode.encodeSrt(
-            id, nCues = 3 + (id % 6).toInt)
-          val content = if (id % 101 == 0) srt.take(15) else srt
-          graft.api.MediaIn(id, content, "text/srt")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val srt = graft.api.MultimodalDecode.encodeSrt(
+        id, nCues = 3 + (id % 6).toInt)
+      val content = if (id % 101 == 0) srt.take(15) else srt
+      graft.api.MediaIn(id, content, "text/srt")
+    }
     graft.api.MultimodalDecode.parseSrt(payloads).toDF()
       .select(col("doc_id"), col("cue_idx"), col("start_ms"),
         col("end_ms"), col("n_chars"), col("ok").cast("int").as("ok"))
@@ -1328,22 +1252,17 @@ object LlmQueries extends QueryPack {
     * functions of (doc_id, k)); corrupt payloads (6-byte truncation —
     * the final record loses its terminator, every 83rd doc) yield one
     * loud ok=0 row. Pure map work, no shuffle after the id
-    * repartition; at 100 TB this is the stage that runs WIDEST (one
+    * spread; at 100 TB this is the stage that runs WIDEST (one
     * task per WARC chunk), so zero-shuffle is the design.
     */
   def warcProbe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val warc = graft.api.MultimodalDecode.encodeWarc(
-            id, nRecords = 1 + (id % 3).toInt)
-          val content =
-            if (id % 83 == 0) warc.take(warc.length - 6) else warc
-          graft.api.MediaIn(id, content, "application/warc")
-        }
-      }
+    val payloads = mediaPayloads(s, d) { id =>
+      val warc = graft.api.MultimodalDecode.encodeWarc(
+        id, nRecords = 1 + (id % 3).toInt)
+      val content =
+        if (id % 83 == 0) warc.take(warc.length - 6) else warc
+      graft.api.MediaIn(id, content, "application/warc")
+    }
     graft.api.MultimodalDecode.parseWarc(payloads).toDF()
       .select(col("doc_id"), col("rec_idx"), col("warc_type"),
         col("target_uri"), col("content_length"), col("n_headers"),
@@ -1365,16 +1284,13 @@ object LlmQueries extends QueryPack {
     * a flipped stored-CRC byte (% 89 = 23, the transport-flip case the
     * trailer exists for), a truncated trailer (% 89 = 47) — each
     * yield one loud ok=0 row. Pure map work, decode cost linear in
-    * compressed bytes, no shuffle after the id repartition.
+    * compressed bytes, no shuffle after the id spread.
     */
   def warcGzProbe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        graft.api.MediaIn(id, graft.api.MultimodalDecode.encodeWarcGz(
-          id, nRecords = 1 + (id % 4).toInt), "application/warc+gzip")
-      })
+    val payloads = mediaPayloads(s, d) { id =>
+      graft.api.MediaIn(id, graft.api.MultimodalDecode.encodeWarcGz(
+        id, nRecords = 1 + (id % 4).toInt), "application/warc+gzip")
+    }
     graft.api.MultimodalDecode.parseWarcGz(payloads).toDF()
       .select(col("doc_id"), col("member_idx"), col("warc_type"),
         col("target_uri"), col("content_length"), col("n_headers"),
@@ -1394,16 +1310,13 @@ object LlmQueries extends QueryPack {
     * arms (BOM-contradicting truncated lead at doc_id % 35 = 8,
     * de-aligned UTF-16 at doc_id % 35 = 13) yield one loud zeroed
     * ok=0 row each. Pure map work, no shuffle after the id
-    * repartition — at 100 TB this runs as wide as the WARC split.
+    * spread — at 100 TB this runs as wide as the WARC split.
     */
   def charsetProbe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        graft.api.MediaIn(id,
-          graft.api.MultimodalDecode.encodeCharsetDoc(id), "text/html")
-      })
+    val payloads = mediaPayloads(s, d) { id =>
+      graft.api.MediaIn(id,
+        graft.api.MultimodalDecode.encodeCharsetDoc(id), "text/html")
+    }
     graft.api.MultimodalDecode.sniffCharset(payloads).toDF()
       .select(col("doc_id"), col("bom"), col("meta_charset"),
         col("detected"), col("n_bytes"), col("n_ascii"),
@@ -1422,25 +1335,18 @@ object LlmQueries extends QueryPack {
     * loudly.
     */
   def mediaMp4Table(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[graft.api.MediaIn] = {
-    import s.implicits._
-    // same single-split guard as mediaPngTable/mediaWavTable
-    Tables.documents(s, d).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val mp4 = graft.api.MultimodalDecode.encodeMp4(
-            durationUnits = 3000L + id % 9000,
-            timescale = 600 + (id % 5).toInt * 150,
-            width = 320 + (id % 8).toInt * 80,
-            height = 240 + (id % 6).toInt * 60,
-            version1 = id % 11 == 0,
-            audioTrack = id % 3 == 0) // every 3rd container is two-track
-          val content = if (id % 83 == 0) mp4.take(12) else mp4
-          graft.api.MediaIn(id, content, "video/mp4")
-        }
-      }
-  }
+      : Dataset[graft.api.MediaIn] =
+    mediaPayloads(s, d) { id =>
+      val mp4 = graft.api.MultimodalDecode.encodeMp4(
+        durationUnits = 3000L + id % 9000,
+        timescale = 600 + (id % 5).toInt * 150,
+        width = 320 + (id % 8).toInt * 80,
+        height = 240 + (id % 6).toInt * 60,
+        version1 = id % 11 == 0,
+        audioTrack = id % 3 == 0) // every 3rd container is two-track
+      val content = if (id % 83 == 0) mp4.take(12) else mp4
+      graft.api.MediaIn(id, content, "video/mp4")
+    }
 
   /** x_video_probe: REAL video container metadata parse — each payload
     * is a genuine MP4/ISO-BMFF byte layout and duration_ms / timescale /

@@ -1,6 +1,11 @@
 package graft
 
-import graft.api.MultimodalDecode
+import graft.api.{GraftOps, MultimodalDecode}
+import graft.ops.LlmQueries
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** The batch decode harness: typed partition-at-a-time plumbing — schema
@@ -335,6 +340,23 @@ class MultimodalDecodeSpec extends SparkSpec {
     assert(a.except(b).isEmpty && b.except(a).isEmpty)
     val plan = a.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), "decode stage must not shuffle")
+  }
+
+  test("spreadScan fans a one-split scan out to defaultParallelism and " +
+      "leaves an already-wide input unshuffled") {
+    val p = spark.sparkContext.defaultParallelism
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def shuffles(df: DataFrame) =
+      aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    val ids = Tables.documents(spark, sf).select(col("doc_id"))
+    assert(ids.rdd.getNumPartitions < p, "fixture premise: one-file scan")
+    assert(shuffles(GraftOps.spreadScan(ids)) === Seq(RoundRobinPartitioning(p)))
+    assert(LlmQueries.mediaPngTable(spark, sf).rdd.getNumPartitions === p)
+    val wide = spark.range(0L, 64L, 1L, p).toDF()
+    assert(GraftOps.spreadScan(wide) eq wide)
+    assert(shuffles(GraftOps.spreadScan(wide)).isEmpty)
   }
 
   test("images: GIF/BMP/TIFF round-trip dims through the pooled sniffed " +

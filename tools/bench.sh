@@ -1,33 +1,16 @@
 #!/usr/bin/env bash
-# Bench + regression tripwire + outlier self-triage.
+# Bench + regression tripwire.
 #
-# 1. Full per-query sweep at the given sf (default sf0.1).
+# 1. Full per-query sweep at the given sf (default sf0.1). Bench
+#    re-measures every >2x outlier with warm reps inside its own
+#    artifact (the "triage" key of bench_last.json).
 # 2. bench_diff vs the canonical clean reference (tools/bench_ref.txt):
 #    fail on any query regressed >2x — the round-4 lesson (contaminated
 #    runs read unchanged code 3-30x slower).
-# 3. Self-triage (round-5 verdict ask): every >2x outlier is re-measured
-#    with warm TimeQuery reps in one session; bench_triage embeds both
-#    numbers in bench_last.json and records the min, so one background
-#    process on the box cannot certify a false regression — and a real
-#    regression reproduces under warm reps and still fails the re-diff.
+# Targeted re-timing of a flagged query:
+#   sbt "runMain graft.QProf q1,q2 <reps> <sfDir> keepcache"
 set -uo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.1}"
 SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench" || exit 1
-
-if python3 tools/bench_diff.py bench_last.json; then
-  exit 0
-fi
-OUTLIERS="$(python3 tools/bench_triage.py --list bench_last.json)"
-if [ -z "$OUTLIERS" ]; then
-  # diff failed for a non-ratio reason (newly failing query, no shared
-  # queries) — triage cannot adjudicate that; surface the failure.
-  exit 1
-fi
-echo "bench.sh: re-measuring outliers with warm reps: $OUTLIERS"
-TQ_LOG="$(mktemp)"
-# shellcheck disable=SC2086
-SPARK_GRAFT_TQ_REPS=3 sbt -batch \
-  "runMain graft.TimeQuery $SF_DIR $OUTLIERS" | tee "$TQ_LOG"
-python3 tools/bench_triage.py --embed bench_last.json "$TQ_LOG"
 python3 tools/bench_diff.py bench_last.json

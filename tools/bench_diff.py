@@ -157,8 +157,9 @@ def main():
     # (the previous form) let a 40ms query regress 10x to 0.4s silently;
     # now floor(40ms) = 80ms and that regression fails, while floor(5s) =
     # 0.5s keeps real big-query regressions failing. Genuine sub-second
-    # jitter that still trips gets re-measured with warm reps by bench.sh
-    # (bench_triage) before anyone believes the number.
+    # jitter that still trips is already re-measured with warm reps
+    # inside the Bench artifact ("triage"); re-time a flagged query with
+    # QProf (q1,q2 <reps> <sfDir> keepcache) before believing it.
     # The delta floor is applied on the calib-adjusted new time so a box
     # that is uniformly 1.5x slower doesn't push every small query over
     # its own floor.
@@ -198,7 +199,8 @@ def main():
         print(f"bench_diff: FAIL — {len(regressed)} queries regressed "
               f">{threshold}x after box-calibration normalization "
               f"(calib ratio {calib_ratio:.2f}x already divided out; "
-              f"re-run warm reps via bench_triage before believing it)")
+              f"re-time with QProf <q1,q2> <reps> <sfDir> keepcache "
+              f"before believing it)")
         return 1
     print(f"bench_diff: OK — no query regressed >{threshold}x "
           f"(calib-normalized)")
