@@ -64,29 +64,6 @@ object QProf {
           if (e.taskInfo != null) taskMs.addAndGet(e.taskInfo.duration)
         }
       })
-    // Diagnostic: QPROF_NO_SQL_LISTENER=1 detaches the SQL status-store
-    // listener (plan-string/SparkPlanInfo bookkeeping per AQE update) to
-    // measure its share of per-stage latency.
-    if (sys.env.contains("QPROF_NO_SQL_LISTENER")) {
-      // listenerBus is private[spark]; reflection keeps this a pure
-      // measurement hack (QProf is diagnostics, not a query path)
-      val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-      val bus = busM.invoke(spark.sparkContext)
-      val listM = bus.getClass.getMethod("listeners")
-      val listeners = listM.invoke(bus)
-        .asInstanceOf[java.util.List[AnyRef]]
-      val rm = bus.getClass.getMethods
-        .find(_.getName == "removeListener").get
-      val toRemove = new java.util.ArrayList[AnyRef]()
-      listeners.forEach { l =>
-        println(s"listener: ${l.getClass.getName}")
-        if (l.getClass.getName.contains("SQLAppStatusListener")) toRemove.add(l)
-      }
-      toRemove.forEach { l =>
-        rm.invoke(bus, l)
-        println(s"removed ${l.getClass.getName}")
-      }
-    }
     SparkEntry.entry(spark).count() // JVM warm-up, untimed
     // Job-latency floor: a trivial 1-task job and a 1-shuffle job, timed
     // after warm-up — the per-job fixed cost every query's stage chain

@@ -1,7 +1,8 @@
 package graft.api
 
 import graft.functions.{ScoredVec, TextFns, TopKByScore, VectorFns}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.LoopSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,6 +58,36 @@ object GraftOps {
           if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
           df.checkpoint(eager)
         case _ => df.localCheckpoint(eager)
+      }
+  }
+
+  /** Round-cache cadence for the bounded iterative loops (kcorePeel,
+    * labelPropagate, bfs/ssspDistances): each round's table persists
+    * LAZILY — it feeds two consumers, so an unmaterialized twin would
+    * double execution per round, and an eager localCheckpoint per round
+    * measured 3.0s -> 1.1s at sf0.1 across the graph tier (the per-round
+    * job barriers dominated). Every 8th round an EAGER checkpoint
+    * materializes the frontier and releases the accumulated round
+    * caches: one amortized barrier bounds both plan depth and
+    * CacheManager retention for long runs (releasing a LAZY round table
+    * would re-expose its double reference and the exponential
+    * twin-evaluation persist exists to prevent).
+    */
+  private final class RoundCaches {
+    private val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+
+    /** `df` persisted lazily, released at the next 8th-round barrier. */
+    def hold(df: DataFrame): DataFrame = {
+      val p = df.persistOnce(); held += p; p
+    }
+
+    /** Round `r`'s table under the cadence above. */
+    def round(df: DataFrame, r: Int): DataFrame =
+      if (r % 8 != 0) hold(df)
+      else {
+        val cp = df.truncateLineage()
+        held.foreach(_.unpersist(false)); held.clear()
+        cp
       }
   }
 
@@ -133,41 +164,6 @@ object GraftOps {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
     else df
-  }
-
-  /** Stage-fused execution scope for the ITERATIVE loops (connected
-    * components, peeling, rank iterations): under AQE every Exchange in
-    * a round's plan materializes as its OWN driver job (~70–90 ms floor
-    * each on the local box), so a 3-exchange round costs ~5 jobs of
-    * almost pure scheduling latency per iteration — measured 22–33 jobs
-    * per invocation on the cluster family with ≤1.2 task-seconds of
-    * actual work. Inside this scope AQE is off and the static shuffle
-    * partition count is pinned to `partitions`, so each round's whole
-    * multi-stage plan runs as ONE job with DAGScheduler-chained stages.
-    *
-    * Scale adaptivity is preserved by HOW callers pick `partitions`:
-    * the loop's round-0 table is materialized UNDER AQE first, and its
-    * post-coalescing partition count — AQE's own size-based choice for
-    * exactly this data shape — is what the loop inherits (locally a
-    * handful; at 100 TB, bytes/advisory partitions). Row-level results
-    * are partitioning-independent (joins + aggregates only). The trade
-    * deliberately given up inside the scope is AQE's runtime skew-split
-    * for the per-round joins; round tables here are node-sized
-    * aggregates where per-key rows are already collapsed, which is the
-    * shape skew-join exists to protect — revisit before reusing this
-    * scope on a payload-carrying loop.
-    */
-  def withLoopConf[T](spark: SparkSession, partitions: Int)(body: => T): T = {
-    val conf = spark.conf
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", math.max(1, partitions).toString)
-    try body
-    finally {
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
   }
 
   // ---------------------------------------------------------------- dedup
@@ -1531,42 +1527,43 @@ object GraftOps {
     var prevTotal = Long.MinValue
     var total = labelSum(labels)
     var rounds = 0
-    // Loop rounds run stage-fused ([[withLoopConf]]): one driver job per
-    // round instead of ~5 AQE stage jobs of node-sized exchanges. The
-    // partition count is AQE's own size-based choice for the round-0
-    // label table (materialized by the labelSum above, under AQE).
-    val loopParts = labels.rdd.getNumPartitions
-    withLoopConf(labels.sparkSession, loopParts) {
-      while (total != prevTotal && rounds < 60) {
-        // self-loops put each node's own label in the min, so this single
-        // join+aggregate is the whole hop. Lineage-truncated BEFORE the
-        // pointer jump: the jump self-joins hopped, and an untruncated
-        // plan executed the edge-join + aggregate once per side every
-        // round (observed as duplicated per-round stages in the r15 warm
-        // profile) — the checkpointed RDD materializes once and feeds
-        // both sides.
-        val hopped = edges.join(labels, edges("ed") === labels("doc_id"))
-          .groupBy(col("es")).agg(min(col("lbl")).as("lbl"))
-          .select(col("es").as("doc_id"), col("lbl"))
-          .truncateLineage(eager = false)
-        // pointer jump: lbl := label(lbl). Every label IS a node id, so
-        // the lookup is a total inner join.
-        val jump =
-          hopped.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
-        val next = hopped.join(jump, hopped("lbl") === jump("j_id"))
-          .select(col("doc_id"), col("j_lbl").as("lbl"))
-          .truncateLineage(eager = false)
-        prevTotal = total
-        total = labelSum(next)
-        labels = next
-        rounds += 1
-      }
+    // Loop rounds run stage-fused on a [[LoopSession]]: one driver job
+    // per round instead of ~5 AQE stage jobs of node-sized exchanges,
+    // sized by the round-0 label table (materialized by the labelSum
+    // above, under the caller's AQE).
+    val loop = LoopSession(labels)
+    val loopEdges = LoopSession.bind(edges, loop)
+    labels = LoopSession.bind(labels, loop)
+    while (total != prevTotal && rounds < 60) {
+      // self-loops put each node's own label in the min, so this single
+      // join+aggregate is the whole hop. Lineage-truncated BEFORE the
+      // pointer jump: the jump self-joins hopped, and an untruncated
+      // plan executed the edge-join + aggregate once per side every
+      // round (observed as duplicated per-round stages in the r15 warm
+      // profile) — the checkpointed RDD materializes once and feeds
+      // both sides.
+      val hopped = loopEdges.join(labels, loopEdges("ed") === labels("doc_id"))
+        .groupBy(col("es")).agg(min(col("lbl")).as("lbl"))
+        .select(col("es").as("doc_id"), col("lbl"))
+        .truncateLineage(eager = false)
+      // pointer jump: lbl := label(lbl). Every label IS a node id, so
+      // the lookup is a total inner join.
+      val jump =
+        hopped.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
+      val next = hopped.join(jump, hopped("lbl") === jump("j_id"))
+        .select(col("doc_id"), col("j_lbl").as("lbl"))
+        .truncateLineage(eager = false)
+      prevTotal = total
+      total = labelSum(next)
+      labels = next
+      rounds += 1
     }
     edges.unpersist(blocking = false)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
+    LoopSession.bind(labels.join(sizes, "lbl")
       .select(col("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("lbl")).cast("int").as("is_canonical"))
+        (col("doc_id") === col("lbl")).cast("int").as("is_canonical")),
+      pairs.sparkSession)
   }
 
   /** Benchmark decontamination — drop training documents that overlap a
@@ -2686,18 +2683,15 @@ object GraftOps {
       "silently; normalize the corpus or choose a disjoint alphabet")
     val base = cacheOnce(wordFreq.select(col("freq"),
       regexp_replace(col("word"), "(.)", "<$1>").as("syms")))
-    var words = base
+    // merge rounds run stage-fused on a [[LoopSession]] sized by the
+    // already-materialized vocabulary cache: each round is one
+    // vocab-bounded pair aggregate + a 1-row argmax collect, which under
+    // AQE cost 2-3 stage jobs of scheduling latency apiece
+    var words = LoopSession.bind(base, LoopSession(wordFreq))
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var r = 1
     var exhausted = false
-    // merge rounds run stage-fused ([[withLoopConf]]): each round is one
-    // vocab-bounded pair aggregate + a 1-row argmax collect, which under
-    // AQE cost 2-3 stage jobs of scheduling latency apiece; the partition
-    // count is inherited from the already-materialized vocabulary cache
-    // (AQE's own size-based choice for exactly this table).
-    val loopParts = math.max(1, wordFreq.rdd.getNumPartitions)
-    withLoopConf(spark, loopParts) {
     while (r <= rounds && !exhausted) {
       // adjacent symbol pairs weighted by word frequency; single-symbol
       // words drop out (size < 2 — the guard matters: Spark's
@@ -2728,7 +2722,6 @@ object GraftOps {
             lit(s"<$l><$rr>"), lit(s"<$l$rr>")))
         r += 1
       }
-    }
     }
     import spark.implicits._
     merges.toSeq.toDF("round", "lhs", "rhs", "pair_count")
@@ -5338,55 +5331,37 @@ object GraftOps {
     * set equals the ORIGINAL edges restricted to round r's survivors —
     * the edge table therefore materializes exactly once (persisted) and
     * each round filters it with the latest survivor set (node-sized; AQE
-    * broadcasts it). The tiny survivor set is PERSISTED per round — it
-    * is referenced by both endpoint joins AND the next round's degree
-    * count, so an unmaterialized twin would double execution per round;
-    * lazy persist beats an eager checkpoint barrier ([[hits]] lesson),
-    * with a depth-bounding localCheckpoint every 8th round for long
-    * runs. Output: every surviving node with its final within-core
-    * degree.
+    * broadcasts it). The tiny survivor set is referenced by both
+    * endpoint joins AND the next round's degree count, so it follows the
+    * [[RoundCaches]] cadence. Output: every surviving node with its final
+    * within-core degree.
     */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val e0 = edges.select(col("src"), col("dst")).persistOnce()
     var cur = e0
-    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val caches = new RoundCaches
     for (r <- 1 to rounds) {
-      // survivor sets persist LAZILY (an eager localCheckpoint per round
-      // measured 3.0s -> 1.1s at sf0.1 across the graph tier — the
-      // per-round job barriers dominated). Every 8th round an EAGER
-      // checkpoint materializes the frontier and releases the
-      // accumulated round caches: one amortized barrier bounds both plan
-      // depth and CacheManager retention for long runs (releasing a
-      // LAZY round table would re-expose its double reference and the
-      // exponential twin-evaluation persist exists to prevent).
-      // (An r16 experiment replaced the per-round persists with lazy
+      // survivor sets follow the [[RoundCaches]] cadence. (An r16
+      // experiment replaced the per-round persists with lazy
       // localCheckpoints + stage fusing, the [[resolveRedirects]] move:
       // warm wall went 1.0s -> 6.1s because the peel re-executed 12
       // task-seconds of edge-sized double joins per pass — for
       // EDGE-sized round tables the cached nest is the right trade, the
       // flat-RDD rebuild only wins for node-sized state.)
-      val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src"))
-      val keepB =
-        if (r % 8 == 0) {
-          val cp = keep.truncateLineage()
-          held.foreach(_.unpersist(false)); held.clear()
-          cp
-        } else { val kp = keep.persistOnce(); held += kp; kp }
-      // the round's edge table persists too (lazily, same discipline as
-      // keepB): round r+1's degree aggregate and the final core-degree
-      // both re-reference it, and an unmaterialized cur re-executed the
-      // whole e0 ⋈ keep₁ ⋈ … ⋈ keepᵣ chain per reference — O(rounds²)
-      // edge joins overall (observed as three identical edge-sized
-      // shuffle writes per warm run at sf0.1). Persisted, each round's
-      // double-join runs exactly once and total work is O(rounds); the
-      // every-8th-round barrier still releases the accumulated caches.
-      cur = e0.join(keepB, "src")
+      val keepB = caches.round(
+        cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("src")), r)
+      // the round's edge table is held too: round r+1's degree aggregate
+      // and the final core-degree both re-reference it, and an
+      // unmaterialized cur re-executed the whole e0 ⋈ keep₁ ⋈ … ⋈ keepᵣ
+      // chain per reference — O(rounds²) edge joins overall (observed as
+      // three identical edge-sized shuffle writes per warm run at sf0.1).
+      // Persisted, each round's double-join runs exactly once and total
+      // work is O(rounds).
+      cur = caches.hold(e0.join(keepB, "src")
         .join(keepB.withColumnRenamed("src", "dst"), "dst")
-        .select(col("src"), col("dst"))
-        .persistOnce()
-      held += cur
+        .select(col("src"), col("dst")))
     }
     cur.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
@@ -5491,11 +5466,10 @@ object GraftOps {
     *
     * Scale shape per round: one edge-sized join + min-aggregation
     * (map-side partial min makes the shuffle node-sized), then a
-    * node-sized left join. The label frontier is PERSISTED each round —
-    * it feeds both the next round's neighbor join and its own-label
-    * fallback; lazy persist beats an eager checkpoint barrier ([[hits]]
-    * lesson, measured 2.3s -> 0.75s at sf0.1), with a depth-bounding
-    * localCheckpoint every 8th round for long runs.
+    * node-sized left join. The label frontier feeds both the next
+    * round's neighbor join and its own-label fallback, so it follows the
+    * [[RoundCaches]] cadence (lazy persist measured 2.3s -> 0.75s at
+    * sf0.1 against an eager checkpoint per round).
     */
   def labelPropagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1)
@@ -5509,24 +5483,13 @@ object GraftOps {
     var lab = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
       .persistOnce()
-    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val caches = new RoundCaches
     for (r <- 1 to rounds) {
       val nbr = e.join(lab, e("src") === lab("node"))
         .groupBy(col("dst")).agg(min(col("lab")).as("nlab"))
-      val next = lab.join(nbr, lab("node") === nbr("dst"), "left")
+      lab = caches.round(lab.join(nbr, lab("node") === nbr("dst"), "left")
         .select(col("node"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"))
-      // lazy persist per round (eager checkpoint barriers measured 2.3s
-      // -> 0.75s at sf0.1); every 8th round an EAGER checkpoint
-      // materializes the frontier and releases the accumulated round
-      // caches — one amortized barrier bounds plan depth AND cache
-      // retention (kcorePeel rationale)
-      lab =
-        if (r % 8 == 0) {
-          val cp = next.truncateLineage()
-          held.foreach(_.unpersist(false)); held.clear()
-          cp
-        } else { val np = next.persistOnce(); held += np; np }
+          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab")), r)
     }
     lab
   }
@@ -5546,9 +5509,8 @@ object GraftOps {
     * round propagate (`frontier`), so a round's join touches the edges of
     * the expanding wavefront, not the whole reached set — on a 100-TB
     * graph the late rounds stay frontier-sized instead of rescanning
-    * every settled node. Distance tables are PERSISTED per round
-    * ([[labelPropagate]] lesson: each feeds two consumers; lazy persist,
-    * eager-checkpoint-free, with the every-8th-round depth backstop).
+    * every settled node. Distance tables feed two consumers and follow
+    * the [[RoundCaches]] cadence.
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame,
                    rounds: Int): DataFrame =
@@ -5579,26 +5541,18 @@ object GraftOps {
       .select(col("node"), lit(0L).as("dist"))
       .persistOnce()
     var frontier = dist
-    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val caches = new RoundCaches
     for (r <- 1 to rounds) {
       // rnode is an ALIAS (fresh attribute): dist's lineage already
       // contains e's dst, so an unaliased reach("dst") would be ambiguous
       // now that round tables keep lineage (persist, not localCheckpoint).
-      // Lazy persist per round (eager checkpoint barriers dominated the
-      // graph tier — measured ~2x at sf0.1); every 8th round still
-      // localCheckpoints to bound plan depth (the pageRank discipline).
       val reach = e.join(frontier, e("src") === frontier("node"))
         .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("nd"))
         .select(col("dst").as("rnode"), col("nd"))
-      val mergedPlan = dist.join(reach, dist("node") === reach("rnode"), "full")
-        .select(coalesce(dist("node"), reach("rnode")).as("node"),
-          least(col("dist"), col("nd")).as("newdist"), col("dist"))
-      val merged =
-        if (r % 8 == 0) {
-          val cp = mergedPlan.truncateLineage()
-          held.foreach(_.unpersist(false)); held.clear()
-          cp
-        } else { val mp = mergedPlan.persistOnce(); held += mp; mp }
+      val merged = caches.round(
+        dist.join(reach, dist("node") === reach("rnode"), "full")
+          .select(coalesce(dist("node"), reach("rnode")).as("node"),
+            least(col("dist"), col("nd")).as("newdist"), col("dist")), r)
       frontier = merged.filter(col("dist").isNull || col("newdist") < col("dist"))
         .select(col("node"), col("newdist").as("dist"))
       dist = merged.select(col("node"), col("newdist").as("dist"))
@@ -6099,33 +6053,32 @@ object GraftOps {
       coalesce(col("nxt"), col("u")).as("cur"),
       when(col("nxt").isNull, lit(0L)).otherwise(lit(1L)).as("hops"),
       col("nxt").isNull.as("done"))
-    // Rounds build LAZILY with per-round lineage truncation inside the
-    // stage-fused scope ([[withLoopConf]]): each round's LogicalRDD
+    // Rounds build LAZILY with per-round lineage truncation on a
+    // [[LoopSession]] sized by the edge cache: each round's LogicalRDD
     // caches on first compute (so the self-join's two references cost
     // one evaluation, the job trackedCache used to do), the OUTER plan
     // stays a flat RDD scan instead of a rounds-deep InMemoryRelation
     // nest (whose per-stage AQE plan-description walk dominated the
     // warm pass: 0.8s wall at 0.04 task-sec), and the caller's single
     // action executes every round in one DAGScheduler-chained job.
-    withLoopConf(e.sparkSession, math.max(1, e.rdd.getNumPartitions)) {
-      (1 to rounds).foreach { _ =>
-        val hop = state.select(col("u").as("j_u"), col("cur").as("j_cur"),
-          col("hops").as("j_hops"), col("done").as("j_done"))
-        state = state.join(hop, col("cur") === col("j_u"), "left")
-          .select(col("u"),
-            when(col("done") || col("j_u").isNull, col("cur"))
-              .otherwise(col("j_cur")).as("cur"),
-            when(col("done") || col("j_u").isNull, col("hops"))
-              .otherwise(col("hops") + col("j_hops")).as("hops"),
-            when(col("done"), lit(true))
-              .otherwise(coalesce(col("j_done"), lit(false))).as("done"))
-          .truncateLineage(eager = false)
-      }
+    state = LoopSession.bind(state, LoopSession(e))
+    (1 to rounds).foreach { _ =>
+      val hop = state.select(col("u").as("j_u"), col("cur").as("j_cur"),
+        col("hops").as("j_hops"), col("done").as("j_done"))
+      state = state.join(hop, col("cur") === col("j_u"), "left")
+        .select(col("u"),
+          when(col("done") || col("j_u").isNull, col("cur"))
+            .otherwise(col("j_cur")).as("cur"),
+          when(col("done") || col("j_u").isNull, col("hops"))
+            .otherwise(col("hops") + col("j_hops")).as("hops"),
+          when(col("done"), lit(true))
+            .otherwise(coalesce(col("j_done"), lit(false))).as("done"))
+        .truncateLineage(eager = false)
     }
-    state.select(col("u").as("url"),
+    LoopSession.bind(state.select(col("u").as("url"),
       when(col("done"), col("cur")).otherwise(lit("")).as("final_url"),
       when(col("done"), col("hops")).otherwise(lit(0L)).as("hops"),
-      col("done").cast("int").as("resolved"))
+      col("done").cast("int").as("resolved")), edges.sparkSession)
   }
 
   /** robots.txt group parse — the crawl-POLICY text format between the

@@ -114,15 +114,21 @@ object MultimodalDecode {
     * a 32-task sf1 audio stage showed 675/800 executor samples BLOCKED
     * on that monitor (parallel decode ran slower than serial). Sampled
     * audio (RIFF/WAVE, FORM/AIFF, .snd) can never be MIDI, so the MIDI
-    * reader is ordered last and skipped outright for RIFF/FORM payloads
-    * — the non-MIDI readers reject genuinely-MIDI bytes first under
-    * AudioSystem's own semantics, so outcomes are unchanged.
+    * reader is split off once here, ordered last and skipped by
+    * position for RIFF/FORM payloads — the non-MIDI readers reject
+    * genuinely-MIDI bytes first under AudioSystem's own semantics, so
+    * outcomes are unchanged. A JDK whose MIDI reader is renamed falls
+    * back to the contended provider order; that is logged once.
     */
-  private val audioReadersOrdered
-      : Array[javax.sound.sampled.spi.AudioFileReader] = {
+  private val (audioReadersOrdered, nonMidiReaders)
+      : (Array[javax.sound.sampled.spi.AudioFileReader], Int) = {
     val (midi, rest) = audioReaders.partition(
       _.getClass.getName.contains("SoftMidiAudioFileReader"))
-    rest ++ midi
+    if (midi.isEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "no SoftMidiAudioFileReader among the audio providers; every " +
+          "audio decode probes the providers in the JDK's contended order")
+    (rest ++ midi, rest.length)
   }
   private def looksRiffOrForm(c: Array[Byte]): Boolean =
     c.length >= 4 &&
@@ -134,17 +140,15 @@ object MultimodalDecode {
     */
   private def audioStream(c: Array[Byte])
       : javax.sound.sampled.AudioInputStream = {
-    val skipMidi = looksRiffOrForm(c)
+    val n =
+      if (looksRiffOrForm(c)) nonMidiReaders else audioReadersOrdered.length
     var i = 0
-    while (i < audioReadersOrdered.length) {
-      val r = audioReadersOrdered(i)
-      if (!(skipMidi &&
-          r.getClass.getName.contains("SoftMidiAudioFileReader"))) {
-        try return r.getAudioInputStream(new java.io.ByteArrayInputStream(c))
-        catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException |
-               _: java.io.IOException => ()
-        }
+    while (i < n) {
+      try return audioReadersOrdered(i)
+        .getAudioInputStream(new java.io.ByteArrayInputStream(c))
+      catch {
+        case _: javax.sound.sampled.UnsupportedAudioFileException |
+             _: java.io.IOException => ()
       }
       i += 1
     }

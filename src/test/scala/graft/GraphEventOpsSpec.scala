@@ -53,6 +53,10 @@ class GraphEventOpsSpec extends SparkSpec {
     val d4 = GraftOps.bfsDistances(edges, src, rounds = 4).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(d4 === Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L, "e" -> 4L))
+    // 9 rounds crosses the every-8th-round truncation barrier
+    val d9 = GraftOps.bfsDistances(edges, src, rounds = 9).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(d9 === d4)
     // the f-g component is unreachable at any horizon: no sentinel rows
     assert(!d4.contains("f") && !d4.contains("g"))
   }
@@ -260,20 +264,22 @@ class GraphEventOpsSpec extends SparkSpec {
         else None
       }).flatten.distinct
       val k = 2 + rnd.nextInt(2)
-      val rounds = 3
-      // reference: identical bounded peel over an adjacency map
-      var adj = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      for (_ <- 1 to rounds) {
-        val deg = adj.groupBy(_._1).view.mapValues(_.size).toMap
-        val keep = deg.filter(_._2 >= k).keySet
-        adj = adj.filter { case (a, b) => keep(a) && keep(b) }
+      // 9 rounds crosses the every-8th-round truncation barrier
+      for (rounds <- if (trial == 1) Seq(3, 9) else Seq(3)) {
+        // reference: identical bounded peel over an adjacency map
+        var adj = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+        for (_ <- 1 to rounds) {
+          val deg = adj.groupBy(_._1).view.mapValues(_.size).toMap
+          val keep = deg.filter(_._2 >= k).keySet
+          adj = adj.filter { case (a, b) => keep(a) && keep(b) }
+        }
+        val expected = adj.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+        val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+          .toDF("src", "dst")
+        val got = GraftOps.kcorePeel(edges, k, rounds).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got === expected, s"trial $trial (n=$n, k=$k, rounds=$rounds)")
       }
-      val expected = adj.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-        .toDF("src", "dst")
-      val got = GraftOps.kcorePeel(edges, k, rounds).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got === expected, s"trial $trial (n=$n, k=$k)")
     }
   }
 
@@ -391,15 +397,18 @@ class GraphEventOpsSpec extends SparkSpec {
         if (a != b) Some((s"n$a", s"n$b")) else None
       }).flatten.distinct
       val sym = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
-      val rounds = 1 + rnd.nextInt(3)
-      // reference: synchronous min-label rounds over an adjacency map
+      val drawn = 1 + rnd.nextInt(3)
       val adj = sym.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      var lab = adj.keySet.map(v => v -> v).toMap
-      for (_ <- 1 to rounds)
-        lab = lab.map { case (v, l) => v -> (adj(v).map(lab) :+ l).min }
-      val got = GraftOps.labelPropagate(sym.toDF("src", "dst"), rounds)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(got === lab, s"trial $trial (n=$n, rounds=$rounds)")
+      // 9 rounds crosses the every-8th-round truncation barrier
+      for (rounds <- if (trial == 1) Seq(drawn, 9) else Seq(drawn)) {
+        // reference: synchronous min-label rounds over an adjacency map
+        var lab = adj.keySet.map(v => v -> v).toMap
+        for (_ <- 1 to rounds)
+          lab = lab.map { case (v, l) => v -> (adj(v).map(lab) :+ l).min }
+        val got = GraftOps.labelPropagate(sym.toDF("src", "dst"), rounds)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(got === lab, s"trial $trial (n=$n, rounds=$rounds)")
+      }
       // at >= diameter rounds the labels are exactly the per-component
       // minima — cross-check against union-find components
       val cc = {
